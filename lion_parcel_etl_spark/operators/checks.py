@@ -59,14 +59,11 @@ def expect_ref_integrity(
     child_key: str,
     parent: DataFrame,
     parent_key: str,
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """Child rows whose key has no match in the parent (dbt
-    ``relationships``). The parent side collapses to distinct keys
-    before the anti-join."""
-    pk = parent.select(F.col(parent_key).alias(child_key)).distinct()
-    if broadcast_parent:
-        pk = F.broadcast(pk)
+    ``relationships``). The parent side collapses to distinct keys,
+    broadcast to the anti-join."""
+    pk = F.broadcast(parent.select(F.col(parent_key).alias(child_key)).distinct())
     return child.filter(F.col(child_key).isNotNull()).join(
         pk, on=child_key, how="left_anti"
     )

@@ -45,7 +45,6 @@ def merge_upsert(
     target: DataFrame | None,
     updates: DataFrame,
     keys: list[str],
-    broadcast_updates: bool = True,
     dedupe_updates: bool = False,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -61,7 +60,8 @@ def merge_upsert(
 
     A NULL key value is treated as a real key (null-safe anti-join):
     an update for the null key replaces the null-key target row rather
-    than accumulating next to it.
+    than accumulating next to it. The batch's key set is broadcast, so
+    the target is never shuffled.
     """
     if dedupe_updates:
         if order_col is None:
@@ -80,10 +80,7 @@ def merge_upsert(
     if target is None:
         return updates
     updates = sync_columns(updates, target)
-    update_keys = updates.select(*keys).distinct()
-    if broadcast_updates:
-        update_keys = F.broadcast(update_keys)
-    uk = update_keys.alias("__u")
+    uk = F.broadcast(updates.select(*keys).distinct()).alias("__u")
     cond = None
     for k in keys:
         eq = target[k].eqNullSafe(F.col(f"__u.{k}"))
@@ -242,7 +239,6 @@ def merge_upsert_evolve(
     updates: DataFrame,
     keys: list[str],
     mode: str = "sync_all_columns",
-    **merge_kwargs,
 ) -> DataFrame:
     """Incremental merge whose TARGET schema evolves with the batch —
     dbt ``on_schema_change='sync_all_columns'`` (reference K9,
@@ -286,10 +282,7 @@ def merge_upsert_evolve(
             "evolved schema — a batch may not drop its own merge key"
         )
     return merge_upsert(
-        sync_columns(target, template),
-        sync_columns(updates, template),
-        keys,
-        **merge_kwargs,
+        sync_columns(target, template), sync_columns(updates, template), keys
     )
 
 

@@ -208,7 +208,6 @@ def resample_interpolate(
     key_col: str,
     ts_col: str,
     value_col: str,
-    step: str = "1 hour",
     trunc_unit: str = "hour",
 ) -> DataFrame:
     """(key, t, value, observed) — regularize an irregular time series
@@ -229,12 +228,12 @@ def resample_interpolate(
     plus TWO grid-sized window sorts (ASC + DESC running ignore-nulls
     frames over ~1M rows at sf0.1); this shape pays one window over
     the far smaller bucket table and a Generate. Grid rows are
-    identical (all buckets sit on the hourly lattice, so per-segment
-    sequences tile the old per-key [min, max] sequence exactly —
-    contract: ``step`` must equal one ``trunc_unit``, the shipped
-    configuration) and the interpolation arithmetic is term-for-term
-    the same doubles, so the output is byte-identical (oracle
-    hash-verified). Grid points at observed buckets pass through
+    identical (the grid step is one ``trunc_unit`` and every bucket
+    sits on that lattice, so per-segment sequences tile the old
+    per-key [min, max] sequence exactly; ``trunc_unit`` must name an
+    interval unit — second, minute, hour, day, week, month, year) and
+    the interpolation arithmetic is term-for-term the same doubles, so
+    the output is byte-identical (oracle hash-verified). Grid points at observed buckets pass through
     exactly (observed = true); interior gaps are bounded by observed
     buckets on both sides by construction, so the interpolation
     denominators are never null."""
@@ -256,7 +255,7 @@ def resample_interpolate(
     # plus the gap rows it left-bounds; the per-key LAST bucket
     # (next_t null) emits only itself — so resampling still never
     # extrapolates past a key's own first/last observation
-    step_iv = F.expr(f"INTERVAL {step}")
+    step_iv = F.expr(f"INTERVAL 1 {trunc_unit}")
     pts = F.sequence(
         F.col("t"),
         F.coalesce(F.col("__nt") - step_iv, F.col("t")),

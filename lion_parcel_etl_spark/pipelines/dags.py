@@ -23,7 +23,11 @@ from lion_parcel_etl_spark.operators.checks import (
     expect_unique,
     run_checks,
 )
-from lion_parcel_etl_spark.operators.scd2 import scd2_apply
+from lion_parcel_etl_spark.operators.scd2 import (
+    scd2_apply,
+    scd2_commit,
+    scd2_read_current,
+)
 from lion_parcel_etl_spark.pipelines.bonus import metrics_detail, metrics_final
 from lion_parcel_etl_spark.pipelines.retail import (
     bonus_prod_model,
@@ -57,25 +61,18 @@ def build_retail_pipeline() -> Pipeline:
         spark, wh = ctx["spark"], ctx["warehouse"]
         staging = wh.read(spark, "stg_retail_transactions")
         snap = retail_snapshot(staging, ctx["run_ts"])
-        target = _read_if_exists(wh, spark, "retail_transactions_scd")
-        if target is not None:
-            # partition-column values come back type-inferred as string
-            target = target.withColumn("is_current", F.col("is_current").cast("boolean"))
+        target = scd2_read_current(spark, wh, "retail_transactions_scd")
         out = scd2_apply(
             target, snap, ["id"], SCD_TRACKED, "updated_at", ctx["run_ts"]
         )
-        # partition by is_current: history is append-only at scale, only
-        # the small current partition churns per run (SURVEY §7 item 8)
-        wh.overwrite(out, "retail_transactions_scd", partition_by=["is_current"])
+        scd2_commit(wh, "retail_transactions_scd", out, ["id"], ctx["run_ts"])
 
     def checks(ctx):
         # the dbt-test stage the reference scaffolds but leaves empty
         # (SURVEY §5): the constraints its models imply, enforced.
         spark, wh = ctx["spark"], ctx["warehouse"]
         mart = wh.read(spark, "retail_transactions")
-        scd = wh.read(spark, "retail_transactions_scd").withColumn(
-            "is_current", F.col("is_current").cast("boolean")
-        )
+        scd = wh.read(spark, "retail_transactions_scd")
         summary = run_checks(
             {
                 "retail_transactions.id_unique": expect_unique(mart, ["id"]),

@@ -70,13 +70,13 @@ def retail_transactions_model(
     null otherwise.
     """
     run = F.to_timestamp(F.lit(run_ts))
-    src = staging.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("customer_id").cast("string").alias("customer_id"),
+    src = retail_snapshot(staging, run_ts).select(
+        "id",
+        "customer_id",
         "last_status",
         "pos_origin",
         "pos_destination",
-        F.coalesce(F.col("created_at").cast("timestamp"), run).alias("created_at"),
+        "created_at",
         run.alias("updated_at"),
     )
     if target is not None:

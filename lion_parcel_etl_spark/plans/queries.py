@@ -1918,7 +1918,9 @@ def _register_store_cleanup(path: str) -> None:
                 shutil.rmtree(p, ignore_errors=True)
 
         atexit.register(_cleanup)
-    _STORE_CLEANUP_PATHS.append(path)
+    # an evicted store rebuilds at its stable path: register it once
+    if path not in _STORE_CLEANUP_PATHS:
+        _STORE_CLEANUP_PATHS.append(path)
 
 
 def q_minhash_incremental(spark, sf_dir):

@@ -62,20 +62,48 @@ def test_retail_two_runs_soft_delete_and_scd(spark, wh):
     assert del2[2] == first_deleted  # preserved across runs
     assert del2[3] is None
 
-    scd = wh.read(spark, "retail_transactions_scd").withColumn(
-        "is_current", F.col("is_current").cast("boolean")
-    )
+    scd = wh.read(spark, "retail_transactions_scd")
     by_id = {(r["id"], r["is_current"]): r for r in scd.collect()}
     # id 1 has an expired version (PICKED) and a current one (DONE)
     assert (1, False) in by_id and (1, True) in by_id
     assert by_id[(1, True)]["last_status"] == "DONE"
     # unchanged id 2: single current version
     assert (2, True) in by_id and (2, False) not in by_id
-    # partitioned storage by is_current
+    # state-partitioned storage: open versions under state=current,
+    # expired ones in a per-run directory under state=history
+    assert all(r["state"] == ("current" if r["is_current"] else "history")
+               for r in scd.collect())
     import os
 
-    parts = os.listdir(wh.table_path("retail_transactions_scd"))
-    assert any(p.startswith("is_current=") for p in parts)
+    table_dir = wh.table_path("retail_transactions_scd")
+    data_dirs = {
+        os.path.relpath(dp, table_dir)
+        for dp, _dns, fns in os.walk(table_dir)
+        if any(f.endswith(".parquet") for f in fns)
+    }
+    assert "state=current" in data_dirs
+    hist = data_dirs - {"state=current"}
+    assert hist and all(
+        d.startswith(os.path.join("state=history", "run-")) for d in hist
+    )
+
+    # same-run_ts replay of RUN2 (an Airflow retry) changes no id's
+    # version count
+    def versions():
+        return {r["id"]: r["count"] for r in
+                wh.read(spark, "retail_transactions_scd").groupBy("id").count().collect()}
+
+    before = versions()
+    p.run({"spark": spark, "warehouse": wh, "run_ts": RUN2, "source_df": _src(spark, r2)})
+    assert versions() == before
+
+    # a rerun of RUN2 after the source changed id 2 as well: id 2 gains
+    # a version and no id loses one (id 1's version expired by the
+    # first RUN2 attempt stays in history)
+    r2b = [r2[0], (2, "c2", "RETURNED", "JKT", "SMG", "2025-01-01 08:00:00",
+                   "2025-01-01 10:45:00"), r2[2]]
+    p.run({"spark": spark, "warehouse": wh, "run_ts": RUN2, "source_df": _src(spark, r2b)})
+    assert versions() == {**before, 2: before[2] + 1}
 
 
 def test_retail_tag_selection_runs_subgraph(spark, wh):

@@ -295,6 +295,82 @@ def test_scd2_partitioned_same_run_retry_does_not_duplicate_history(
     assert hist.count() == 1
 
 
+def test_scd2_partitioned_replay_of_finished_run_keeps_history(spark, tmp_path):
+    """Replaying a run that already completed (same run_ts, same
+    snapshot — a retry after success, or a streaming checkpoint
+    replay) expires nothing; its history record must survive rather
+    than be replaced with an empty one."""
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_partitioned
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    snap1 = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
+    snap2 = _scd_snap(spark, [(1, "B")], "2024-01-02 00:00:00")
+    rts1, rts2 = "2024-01-01 01:00:00", "2024-01-02 01:00:00"
+    scd2_apply_partitioned(spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1)
+    scd2_apply_partitioned(spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2)
+    done = _scd_canon(wh.read(spark, "dim").drop("state"))
+    scd2_apply_partitioned(spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2)
+    got = wh.read(spark, "dim")
+    assert got.filter(~_F.col("is_current")).count() == 1
+    assert _scd_canon(got.drop("state")) == done
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_scd2_rerun_of_finished_run_over_changed_source_keeps_versions(
+    spark, tmp_path, bucketed
+):
+    """Rerunning a finished run (same run_ts) after the source changed
+    expires other versions than the first attempt did; the run
+    directory must keep the first attempt's expired versions too, or
+    their ids lose a version (they are already gone from current)."""
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.scd2 import (
+        scd2_apply_bucketed,
+        scd2_apply_partitioned,
+    )
+
+    def run(snap, rts):
+        if bucketed:  # one bucket: both ids share the run directory
+            scd2_apply_bucketed(
+                spark, wh, "dim", snap, ["id"], ["status"], "snap_ts", rts, n_buckets=1
+            )
+        else:
+            scd2_apply_partitioned(spark, wh, "dim", snap, ["id"], ["status"], "snap_ts", rts)
+
+    def versions():
+        return {r["id"]: r["count"] for r in wh.read(spark, "dim").groupBy("id").count().collect()}
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    rts2 = "2024-01-02 01:00:00"
+    run(_scd_snap(spark, [(1, "A"), (2, "A")], "2024-01-01 00:00:00"), "2024-01-01 01:00:00")
+    run(_scd_snap(spark, [(1, "B"), (2, "A")], "2024-01-02 00:00:00"), rts2)
+    assert versions() == {1: 2, 2: 1}
+    run(_scd_snap(spark, [(1, "B"), (2, "B")], "2024-01-02 00:00:00"), rts2)
+    assert versions() == {1: 2, 2: 2}
+    got = wh.read(spark, "dim")
+    assert got.filter(_F.col("is_current")).count() == 2
+    assert sorted(
+        r["status"] for r in got.filter(~_F.col("is_current")).collect()
+    ) == ["A", "A"]
+
+
+def test_scd2_partitioned_rejects_is_current_layout(spark, tmp_path):
+    """A table stored in the older ``is_current=`` layout has no
+    ``state=current`` partition; the read says so instead of failing
+    on the missing ``state`` column."""
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.scd2 import scd2_apply, scd2_apply_partitioned
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    snap = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
+    rts = "2024-01-01 01:00:00"
+    old = scd2_apply(None, snap, ["id"], ["status"], "snap_ts", rts)
+    wh.overwrite(old, "dim", partition_by=["is_current"])
+    with pytest.raises(ValueError, match="is_current= layout"):
+        scd2_apply_partitioned(spark, wh, "dim", snap, ["id"], ["status"], "snap_ts", rts)
+
+
 def _bucket_ids_for(spark, n_buckets, want_distinct=2):
     """First `want_distinct` ids (1..99) landing in distinct buckets,
     as {id: bucket} — lets tests pick keys with known bucket homes."""

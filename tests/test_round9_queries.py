@@ -102,6 +102,29 @@ def test_session_store_name_collision_fails_fast(spark):
         )
 
 
+def test_session_store_rebuild_registers_cleanup_once(spark):
+    """Evicting a session store and rebuilding it reuses its stable
+    path, so the atexit cleanup list must hold that path once, not
+    once per rebuild."""
+    import lion_parcel_etl_spark.plans.queries as Q
+
+    def build():
+        return spark.range(2).toDF("n")
+
+    name = "cleanup_once_test"
+    try:
+        for _ in range(3):
+            assert Q._session_store(spark, "/x", name, build).count() == 2
+            Q._evict_session_store(spark, "/x", name)
+        paths = [p for p in Q._STORE_CLEANUP_PATHS if f"_{name}_" in p]
+        assert len(paths) == 1
+    finally:
+        Q._STORE_BUILDER_SITES.pop(name, None)
+        Q._STORE_CLEANUP_PATHS[:] = [
+            p for p in Q._STORE_CLEANUP_PATHS if f"_{name}_" not in p
+        ]
+
+
 def test_simhash_pairs_store_equals_inline_after_incremental(spark, sf_dir):
     """The regression the collision guard exists for, pinned end to
     end: run simhash_incremental FIRST (it builds the historical

@@ -247,6 +247,29 @@ def test_resample_interpolate_bucket_mean_and_no_extrapolation(spark):
     assert out == [(2, 2.0), (3, 4.0), (4, 6.0)]
 
 
+def test_resample_interpolate_daily_grid(spark):
+    from datetime import datetime
+
+    from lion_parcel_etl_spark.operators.temporal import resample_interpolate
+
+    rows = [
+        (1, datetime(2024, 1, 1, 6, 0), 10.0),
+        (1, datetime(2024, 1, 1, 18, 0), 20.0),  # same day → mean 15.0
+        (1, datetime(2024, 1, 4, 9, 0), 45.0),   # 2-day gap → 2 interpolated days
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+    out = sorted(
+        (r["t"].day, r["t"].hour, r["value"], r["observed"])
+        for r in resample_interpolate(
+            df, "user_id", "ts", "value", trunc_unit="day"
+        ).collect()
+    )
+    # one grid point per day, at midnight — no hourly points in between
+    assert out == [
+        (1, 0, 15.0, True), (2, 0, 25.0, False), (3, 0, 35.0, False), (4, 0, 45.0, True),
+    ]
+
+
 def test_kaplan_meier_matches_hand_computation(spark):
     from lion_parcel_etl_spark.operators.temporal import kaplan_meier
 
